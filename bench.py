@@ -298,6 +298,7 @@ def _staging_probe(spark) -> dict:
     family's INCREMENTAL cold cost. Timing only — the staged entries
     are exactly the ones the warmup would have built; no timed-region
     change."""
+    from big_data_share_market_spark import tables
     from big_data_share_market_spark.operators import (
         bpe, dedup, finance, graph, similarity, sqlfeatures, stats,
         text, transforms)
@@ -313,6 +314,7 @@ def _staging_probe(spark) -> dict:
         ("graph.adjacency", lambda: graph._co_adjacency(spark, SF_DIR)),
         ("graph.oriented", lambda: graph._oriented_adjacency(spark, SF_DIR)[0].count()),
         ("graph.repeat_edges", lambda: graph._repeat_edges(spark, SF_DIR).count()),
+        ("tables.event_series", lambda: tables.event_series(spark, SF_DIR).count()),
         ("transforms.bars", lambda: transforms.ohlc_bars(spark, SF_DIR).count()),
         ("finance.daily_rets", lambda: finance._daily_rets(spark, SF_DIR).count()),
         ("stats.paired_values", lambda: stats._paired_values(spark, SF_DIR).count()),

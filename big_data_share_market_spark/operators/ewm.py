@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions import DEC
-from ..tables import keyed_repartition, load_table
+from ..tables import event_series, keyed_repartition
 from .transforms import BARS_CTE, bar_window, ohlc_bars
 
 _ORACLE_KEY_WINDOW = (
@@ -248,8 +248,10 @@ def _ewm_kernel(specs: list[tuple[str, tuple[str, float]]], key_col: str):
 
 
 def _series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (load_table(spark, sf_dir, "events")
-            .select("user_id", "event_id", "ts", F.col("value").alias("close")))
+    """The staged event series: hash(user_id)-partitioned and
+    (ts, event_id)-sorted, so `_apply_ewm` may assume it sorted."""
+    return event_series(spark, sf_dir).select(
+        "user_id", "event_id", "ts", F.col("value").alias("close"))
 
 
 # ---------------------------------------------------------------------------
@@ -263,7 +265,8 @@ def q_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _apply_ewm(
         s, ["ts", "event_id"],
         {"ema_5": ("close", 2.0 / (5.0 + 1.0)),
-         "ema_15": ("close", 2.0 / (15.0 + 1.0))})
+         "ema_15": ("close", 2.0 / (15.0 + 1.0))},
+        assume_sorted=True)
 
 
 _EMA_SQL = f"""
@@ -286,7 +289,8 @@ def q_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _apply_ewm(
         s, ["ts", "event_id"],
         {"ema_12": ("close", 2.0 / (12.0 + 1.0)),
-         "ema_26": ("close", 2.0 / (26.0 + 1.0))})
+         "ema_26": ("close", 2.0 / (26.0 + 1.0))},
+        assume_sorted=True)
     s = s.withColumn("macd", F.col("ema_12") - F.col("ema_26"))
     # The projection preserves the first kernel's (key, ts) layout —
     # chain the second kernel with no second shuffle.

@@ -26,16 +26,15 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions import DEC
-from ..tables import load_table
+from ..tables import event_series
 from .transforms import BARS_CTE, bar_window, ohlc_bars
 
 _ORACLE_KEY_WINDOW = "(PARTITION BY user_id ORDER BY ts, event_id)"
 
 
 def _series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (load_table(spark, sf_dir, "events")
-            .select("user_id", "event_id", "ts",
-                    F.col("value").alias("close")))
+    return event_series(spark, sf_dir).select(
+        "user_id", "event_id", "ts", F.col("value").alias("close"))
 
 
 def _w():

@@ -18,11 +18,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..tables import load_table
+from ..tables import event_series, load_table
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
+    """The staged per-key series (tables.event_series); dedup_upsert,
+    which also returns `props`, reads the table itself."""
+    return event_series(spark, sf_dir)
 
 
 # Deterministic per-key ordering everywhere: ts then event_id tiebreak
@@ -163,7 +165,7 @@ def q_dedup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     upsert ≡ keep one row per (user_id, ts), last-write-wins by
     event_id. Expressed as row_number (deterministic winner) rather
     than dropDuplicates (arbitrary winner)."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id", "ts").orderBy(F.desc("event_id"))
     return (
         ev.withColumn("rn", F.row_number().over(w))

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import DEC, dsum_over_sql
-from ..tables import load_table
+from ..tables import event_series, load_table
 
 
 #: Staged ranked input for the recursive Kalman (compute-once-per-
@@ -211,19 +211,17 @@ def q_rolling_24h_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     and decimal-exact value sum of the SAME user's events in
     (ts − 24 h, ts] — an event-time RANGE frame over irregular
     timestamps (every other rolling metric in the tree is ROW-count
-    framed). One hash exchange on user_id; the frame bound is exact
-    integer micros so both engines cut it identically."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "value",
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP))").alias("t"))
-    w = (Window.partitionBy("user_id").orderBy("t")
-         .rangeBetween(-(_DAY_US - 1), 0))
-    return (e.select(
+    framed). The frame is ordered by `ts` itself, so it rides the
+    staged series' hash(user_id) + (ts, event_id) layout with no
+    Exchange or Sort of its own; the bound is the exact day-time
+    interval 24 h − 1 µs, the oracle's integer-micros bound."""
+    over = ("OVER (PARTITION BY user_id ORDER BY ts RANGE BETWEEN "
+            "INTERVAL '0 23:59:59.999999' DAY TO SECOND PRECEDING "
+            "AND CURRENT ROW)")
+    return (event_series(spark, sf_dir).select(
         "user_id", "event_id", "ts",
-        F.count("*").over(w).alias("n_24h"),
-        F.sum(F.col("value").cast(DEC)).over(w).cast("double")
+        F.expr(f"count(*) {over}").alias("n_24h"),
+        F.expr(f"CAST(sum(CAST(value AS {DEC})) {over} AS DOUBLE)")
         .alias("sum_24h"))
         .orderBy("user_id", "event_id"))
 

@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..tables import load_table
+from ..staging import persist_laid_out
+from ..tables import event_series
 
 #: DuckDB oracle CTE mirroring :func:`ohlc_bars` — reused by every
 #: bar-based oracle (patterns, ewm/ADX, strategies).
@@ -51,15 +52,18 @@ def ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     STAGED (computed once per session/fixture, persisted).
 
     open/close are ordered-first/last via min_by/max_by on the
-    (ts, event_id) struct — one aggregation pass, no window shuffle.
+    (ts, event_id) struct — one aggregation pass over the staged
+    event series (tables.event_series), whose `user_id` partitioning
+    already clusters every (user_id, bar_ts) group, so the rollup adds
+    no exchange. The bars are sorted by (user_id, bar_ts) within those
+    partitions before the persist, so bar windows (:func:`bar_window`)
+    plan no Exchange and no Sort above the cached scan.
     """
-    from pyspark import StorageLevel
-
     key = (spark.sparkContext.applicationId, sf_dir)
     cached = _BARS_CACHE.get(key)
     if cached is not None:
         return cached
-    ev = load_table(spark, sf_dir, "events")
+    ev = event_series(spark, sf_dir)
     order_key = F.struct(F.col("ts"), F.col("event_id"))
     bars = (
         ev.groupBy("user_id", F.date_trunc("hour", F.col("ts")).alias("bar_ts"))
@@ -70,8 +74,9 @@ def ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max_by("value", order_key).alias("close"),
             F.count("*").alias("volume"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .sortWithinPartitions("user_id", "bar_ts")
     )
+    bars = persist_laid_out(bars)
     _BARS_CACHE[key] = bars
     return bars
 

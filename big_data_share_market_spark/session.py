@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import os
 import zipfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -115,3 +117,18 @@ def prep(spark: SparkSession) -> SparkSession:
         pass
     _ship_package(spark)
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set a runtime conf for the body only, then put back exactly
+    what the caller had: its value, or unset if it was unset."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

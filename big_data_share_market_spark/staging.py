@@ -1,15 +1,23 @@
 """Staged-relation lifecycle management.
 
-Six operator families stage a persisted relation per
-(SparkContext, sf_dir) — the "compute once, sweep many" pattern a
-production pipeline materializes to a staging store:
+Operator families stage a persisted relation per (SparkContext,
+sf_dir) — the "compute once, sweep many" pattern a production pipeline
+materializes to a staging store:
 
+  * tables.event_series       — per-key event series, laid out
+                                hash(user_id) + sorted (ts, event_id)
+  * transforms.ohlc_bars      — hourly OHLCV bar rollup (built from
+                                the event series)
   * dedup._shingled           — shingled corpus
   * dedup._shingle_df         — shingle document-frequency index
   * dedup (MinHash/SimHash)   — signature stores
   * text.staged_tokens        — tokenized corpus
   * graph._co_adjacency       — co-purchase adjacency lists
-  * transforms.ohlc_bars      — hourly OHLCV bar rollup
+
+Only relations that many queries re-read in the same shape are
+staged. Raw fixture reads that are filtered or pruned differently per
+query stay plain parquet scans (tables.load_table), so predicates and
+column pruning still reach the files — see tables.py.
 
 persist() is local-mode's equivalent of that store, but a long-lived
 session (a notebook, a query service) eventually wants the memory
@@ -27,12 +35,19 @@ from __future__ import annotations
 
 from typing import Any
 
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame
+
+from .session import scoped_conf
+
 
 def _cache_registries() -> list[tuple[str, dict]]:
+    from . import tables
     from .operators import (bpe, dedup, finance, graph, similarity,
                             sqlfeatures, stats, text, transforms)
 
     return [
+        ("tables.event_series", tables._SERIES_CACHE),
         ("stats.paired_values", stats._PAIRED_CACHE),
         ("transforms.bars", transforms._BARS_CACHE),
         ("finance.daily_rets", finance._DRETS_CACHE),
@@ -79,3 +94,17 @@ def unpersist_staged(blocking: bool = False) -> int:
             released += 1
         reg.clear()
     return released
+
+
+def persist_laid_out(df: DataFrame) -> DataFrame:
+    """`df.persist(MEMORY_AND_DISK)` with the cached plan planned
+    without AQE, so the cached scan reports the plan's partitioning
+    and ordering from the start. An adaptive cached plan reports them
+    only once it has run: every plan built over the not yet
+    materialized cache would add its own Exchange and Sort above it,
+    and the printed plan would nest the cache's adaptive sections
+    out of line. The staging builds (a scan, at most one
+    explicit-width shuffle, an aggregate, a sort) give AQE nothing to
+    adapt."""
+    with scoped_conf(df.sparkSession, "spark.sql.adaptive.enabled", "false"):
+        return df.persist(StorageLevel.MEMORY_AND_DISK)

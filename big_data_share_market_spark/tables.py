@@ -1,4 +1,4 @@
-"""Fixture table loaders.
+"""Fixture table loaders and the staged keyed event series.
 
 All driver fixtures are single Parquet files per table
 (`/root/testdata/sf*/NAME.parquet`, see TESTDATA.md). Loading stays a
@@ -7,12 +7,26 @@ column pruning, and partition-count autotuning
 (`spark.sql.files.maxPartitionBytes` splits big files into tasks) — at
 100 TB these would be directory-partitioned tables and the same call
 prunes partitions.
+
+One read is staged instead: :func:`event_series`, the per-key
+`(user_id, event_id, ts, value, event_type)` series that the window
+indicators, the ewm kernels, the keyed signal operators, the 24 h
+RANGE frame and the hourly bar rollup all re-read and re-lay out the
+same way (hash on `user_id`, sorted by `ts, event_id`). Staging it in
+that layout once lets every such consumer plan no scan, no Exchange
+and no Sort of its own. Every other read — filtered, pruned to other
+columns, or needing `props` — stays on :func:`load_table`, because a
+read of the staged relation would stop filters and column pruning at
+the cached scan instead of letting them reach parquet.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .session import scoped_conf
+from .staging import persist_laid_out
 
 TABLE_NAMES = (
     "region", "nation", "customer", "supplier", "part",
@@ -26,18 +40,22 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    if name == "events":
-        # events.parquet stores TIMESTAMP(NANOS), which Spark's parquet
-        # reader rejects. Read nanos as int64 and truncate to micros —
-        # exactly what DuckDB does (verified: ...778549829 ns → ...778549 µs),
-        # so the oracle sees identical values. `div` is integral division
-        # (a double divide would lose precision above 2^53).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if name != "events":
+        return spark.read.parquet(path)
+    # An events.parquet written with TIMESTAMP(NANOS) `ts`, which
+    # Spark's schema inference rejects: read nanos as int64 and
+    # truncate to micros — exactly what DuckDB does (verified:
+    # ...778549829 ns → ...778549 µs), so the oracle sees identical
+    # values. `div` is integral division (a double divide would lose
+    # precision above 2^53). Only the inference needs the conf: the
+    # scan reads the int64 column it resolved whatever the conf is
+    # when the plan runs, lazily or staged, so the caller's setting is
+    # restored before returning.
+    with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
         df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return df
-    return spark.read.parquet(path)
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return df
 
 
 def fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -54,7 +72,8 @@ def fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
-def kernel_width(df: DataFrame, per_partition_bytes: int = 128 << 20) -> int | None:
+def kernel_width(df: DataFrame, per_partition_bytes: int = 128 << 20,
+                 default: int | None = None) -> int | None:
     """Scale-adaptive shuffle width for keyed partition-wide kernels
     (theil_sen_fit, _apply_ewm): with `repartition(key)` the width is
     `spark.sql.shuffle.partitions` — constant — so partition BYTES
@@ -65,11 +84,14 @@ def kernel_width(df: DataFrame, per_partition_bytes: int = 128 << 20) -> int | N
     return None and the caller keeps the plain `repartition(key)`
     (identical plan at fixture scale, AQE coalescing intact). The
     estimate is the pre-shuffle optimized-plan size — conservative
-    for these kernels, whose input is a pruned scan."""
+    for these kernels, whose input is a pruned scan. `default` is the
+    width the caller uses otherwise (the session shuffle width if
+    None)."""
     try:
         size = int(df._jdf.queryExecution().optimizedPlan()
                    .stats().sizeInBytes())
-        default = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        default = default or int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
         return None
     if size >= 1 << 50:
@@ -92,11 +114,43 @@ def keyed_repartition(df: DataFrame, *cols: str,
     return df.repartition(width, *cols)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
+#: Staged keyed event series per (applicationId, sf_dir) — see
+#: staging.py for the lifecycle.
+_SERIES_CACHE: dict[tuple, DataFrame] = {}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+def event_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`events` as the per-key series
+    `user_id, event_id, ts, value, event_type`, STAGED (computed once
+    per session/fixture, persisted) in the layout every per-key window
+    and kernel asks for: hash-partitioned on `user_id` at an explicit
+    width and sorted by `(user_id, ts, event_id)` within partitions.
+    The cached scan reports that partitioning and ordering, so
+    EnsureRequirements plans no Exchange and no Sort above it for
+    `PARTITION BY user_id ORDER BY ts, event_id` windows, and drops a
+    `repartition(user_id)` at the same width as redundant.
+
+    The width is explicit (`repartition(n, key)`), which AQE never
+    coalesces, so the layout the plans rely on is the one cached. It
+    is one partition per core — what AQE would coalesce a small
+    shuffle to — capped at the session shuffle width, or
+    :func:`kernel_width`'s byte-based width when the input would
+    overfill those partitions. Taking a plain session's 200 shuffle
+    partitions instead would run every kernel above the cache as 200
+    mostly empty Python tasks, with no exchange left for AQE to
+    coalesce (measured: `ema` 0.29 s → 5.7 s at sf0.1 on 4 cores).
+    """
+    key = (spark.sparkContext.applicationId, sf_dir)
+    cached = _SERIES_CACHE.get(key)
+    if cached is not None:
+        return cached
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_id", "ts", "value", "event_type")
+    width = min(int(spark.conf.get("spark.sql.shuffle.partitions")),
+                spark.sparkContext.defaultParallelism)
+    width = kernel_width(ev, default=width) or width
+    series = persist_laid_out(
+        ev.repartition(width, "user_id")
+        .sortWithinPartitions("user_id", "ts", "event_id"))
+    _SERIES_CACHE[key] = series
+    return series

@@ -456,6 +456,84 @@ def test_unpersist_staged_releases_and_restages(spark):
     assert staging.staged_relations().get("text.tokens")
 
 
+def test_event_series_staged_once_and_released(spark, monkeypatch):
+    """The keyed event series is read and staged once per
+    (application, sf_dir) however many consumers build on it (the
+    bars included), is listed by staged_relations, and
+    unpersist_staged releases it."""
+    from pyspark import StorageLevel
+
+    from big_data_share_market_spark import staging, tables
+
+    staging.unpersist_staged()
+    reads = []
+    load_table = tables.load_table
+    monkeypatch.setattr(tables, "load_table",
+                        lambda *a: reads.append(a[2]) or load_table(*a))
+    series = tables.event_series(spark, SF_DIR)
+    for name in ("sma", "ema", "signal_case", "rolling_24h_value",
+                 "ohlc_bars", "heikin_ashi"):
+        _QUERIES[name][0](spark, SF_DIR)
+    assert reads == ["events"]
+    assert tables.event_series(spark, SF_DIR) is series
+    key = (spark.sparkContext.applicationId, SF_DIR)
+    assert staging.staged_relations()["tables.event_series"] == [key]
+    assert series.storageLevel != StorageLevel.NONE
+    assert series.rdd.getNumPartitions() == min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism)
+
+    assert staging.unpersist_staged() >= 2  # the series and the bars
+    assert series.storageLevel == StorageLevel.NONE
+    assert "tables.event_series" not in staging.staged_relations()
+    assert tables.event_series(spark, SF_DIR) is not series
+
+
+def test_load_table_scopes_nanos_conf_to_the_read(spark, tmp_path):
+    """An events.parquet with TIMESTAMP(NANOS) `ts` (the older fixture
+    format) loads as micros-truncated timestamps, and load_table
+    leaves the caller's `nanosAsLong` setting as it found it: the conf
+    is needed only while the read infers the schema, and the plan
+    still reads the column when it runs later with the conf off, both
+    lazily and as the staged event series."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from big_data_share_market_spark import tables
+
+    ns = [1_700_000_000_778_549_829, 1_700_000_360_000_000_001]
+    pq.write_table(pa.table({
+        "event_id": pa.array([1, 2], pa.int64()),
+        "ts": pa.array(ns, pa.timestamp("ns")),
+        "user_id": pa.array([7, 7], pa.int64()),
+        "event_type": ["tick", "tick"],
+        "value": [1.0, 2.0]}), tmp_path / "events.parquet")
+    want = [n // 1000 for n in ns]
+
+    def micros(df):
+        return [r.us for r in df.orderBy("event_id")
+                .selectExpr("unix_micros(ts) AS us").collect()]
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    sf_dir = str(tmp_path)
+    assert spark.conf.get(key, None) is None
+    try:
+        df = tables.load_table(spark, sf_dir, "events")
+        assert spark.conf.get(key, None) is None
+        spark.conf.set(key, "false")
+        lazy = tables.load_table(spark, sf_dir, "events")
+        assert spark.conf.get(key) == "false"
+        assert micros(df) == want
+        assert micros(lazy) == want
+        assert micros(tables.event_series(spark, sf_dir)) == want
+    finally:
+        spark.conf.unset(key)
+        entry = tables._SERIES_CACHE.pop(
+            (spark.sparkContext.applicationId, sf_dir), None)
+        if entry is not None:
+            entry.unpersist()
+
+
 def test_mmr_picks_distinct_and_complete(spark):
     """MMR must select exactly K distinct candidates per query, pick 1
     must be the pure-relevance argmax (mmr_score = 0.7*rel), and later

@@ -15,10 +15,28 @@ import pytest
 
 from big_data_share_market_spark.plans import explain_str, scan_read_schemas
 from big_data_share_market_spark.registry import all_queries
+from tools.plan_report import split_staged_subtrees
 
 from .conftest import SF_DIR
 
 _QUERIES = all_queries()
+
+
+def staged_split(spark, name: str) -> tuple[str, dict[str, str]]:
+    """A registry query's simple-explain plan split the way
+    tools/plan_report counts it: the main tree, and each distinct
+    staged (InMemoryRelation) build subtree once."""
+    fn, _ = _QUERIES[name]
+    return split_staged_subtrees(explain_str(fn(spark, SF_DIR), "simple"))
+
+
+def hash_exchanges(spark, name: str) -> tuple[int, int]:
+    """(hash exchanges in the main tree, hash exchanges inside the
+    staged build subtrees)."""
+    main, staged = staged_split(spark, name)
+    pat = "Exchange hashpartitioning"
+    return main.count(pat), sum(s.count(pat) for s in staged.values())
+
 
 #: Physical join operators (r10 ADVICE: the bare substring "Join"
 #: would also match unrelated plan-node or relation names, failing a
@@ -207,18 +225,37 @@ def test_topk_avoids_global_sort(spark):
 
 def test_signal_case_single_exchange(spark):
     """The flagship per-key window pipeline needs exactly one hash
-    exchange on the key — more would mean redundant shuffles."""
-    fn, _ = _QUERIES["signal_case"]
-    plan = explain_str(fn(spark, SF_DIR), "simple")
-    assert plan.count("hashpartitioning(") == 1
+    exchange on the key, and it is the one that lays out the staged
+    event series: the window itself adds none."""
+    assert hash_exchanges(spark, "signal_case") == (0, 1)
 
 
 def test_ewm_kernel_single_exchange(spark):
-    """EMA: one shuffle (repartition by key), one Python pass."""
-    fn, _ = _QUERIES["ema"]
-    plan = explain_str(fn(spark, SF_DIR), "simple")
-    assert plan.count("hashpartitioning(") == 1
-    assert plan.count("MapInPandas") == 1
+    """EMA: one shuffle on the key, inside the staged event series;
+    the kernel runs over that layout with no repartition of its own.
+    One Python pass."""
+    assert hash_exchanges(spark, "ema") == (0, 1)
+    main, _ = staged_split(spark, "ema")
+    assert main.count("MapInPandas") == 1
+
+
+#: Consumers of the staged event series (tables.event_series), or of
+#: the bars staged from it, whose windows and kernels all partition by
+#: user_id and order by (ts, event_id) or bar_ts.
+_STAGED_LAYOUT_CONSUMERS = (
+    "sma", "rsi", "ema", "macd", "tsi", "signal_case",
+    "dashboard_snapshot", "heikin_ashi", "atr_wilder", "supertrend")
+
+
+@pytest.mark.parametrize("name", _STAGED_LAYOUT_CONSUMERS)
+def test_staged_layout_consumers_plan_no_exchange_or_sort(spark, name):
+    """The staged relation is cached hash-partitioned on user_id and
+    sorted by its window order, and the cached scan reports both, so
+    nothing above the InMemoryTableScan shuffles or sorts."""
+    main, _ = staged_split(spark, name)
+    assert "InMemoryTableScan" in main, main[:2000]
+    assert "Exchange" not in main, main[:2000]
+    assert not re.search(r"\bSort \[", main), main[:2000]
 
 
 def test_bucketed_join_zero_exchange(spark):
@@ -455,10 +492,9 @@ def test_dashboard_snapshot_single_exchange(spark):
     """The composed dashboard refresh (signal + EMA/SMA/RSI +
     support/resistance + latest-row filter) must share ONE hash
     exchange on the key — each indicator re-shuffling would multiply
-    the reference's per-refresh cost by the indicator count."""
-    fn, _ = _QUERIES["dashboard_snapshot"]
-    plan = explain_str(fn(spark, SF_DIR), "simple")
-    assert plan.count("hashpartitioning(") == 1, plan[:2000]
+    the reference's per-refresh cost by the indicator count. That one
+    exchange lays out the staged event series; the query adds none."""
+    assert hash_exchanges(spark, "dashboard_snapshot") == (0, 1)
 
 
 def test_holt_forecast_single_fulldata_exchange(spark):
@@ -526,11 +562,12 @@ def test_backtest_reuses_staged_bars_bounded_exchanges(spark):
     """The whole backtest (two rolling means, two lags, per-key
     rollup) must ride the staged bar relation with a bounded exchange
     count — a window re-partitioning per indicator would multiply
-    shuffles with indicator count."""
-    fn, _ = _QUERIES["sma_crossover_backtest"]
-    plan = explain_str(fn(spark, SF_DIR), "simple")
-    assert plan.count("Exchange hashpartitioning") <= 3, plan[:1500]
-    assert "InMemoryTableScan" in plan  # staged ohlc_bars reuse
+    shuffles with indicator count. The bars are staged in the event
+    series' user_id layout, so the windows and the per-key rollup add
+    no hash exchange; the one left lays out the staged series."""
+    assert hash_exchanges(spark, "sma_crossover_backtest") == (0, 1)
+    main, _ = staged_split(spark, "sma_crossover_backtest")
+    assert "InMemoryTableScan" in main  # staged ohlc_bars reuse
 
 
 def test_plan_report_counts_staged_subtrees_once():
@@ -750,10 +787,12 @@ def test_lateral_topk_decorrelates_to_window_group_limit(spark):
 
 def test_rolling_24h_single_exchange_range_frame(spark):
     """The event-time RANGE frame must run in ONE hash exchange on
-    user_id with a RangeFrame window (not a self-join reformulation)."""
+    user_id with a RangeFrame window (not a self-join reformulation).
+    That exchange lays out the staged event series; the window, ordered
+    by ts itself, adds none."""
+    assert hash_exchanges(spark, "rolling_24h_value") == (0, 1)
     fn, _ = _QUERIES["rolling_24h_value"]
     plan = explain_str(fn(spark, SF_DIR), "simple")
-    assert plan.count("Exchange hashpartitioning") == 1, plan[:2000]
     assert "specifiedwindowframe(RangeFrame" in plan, plan[:2000]
     assert not has_physical_join(plan), plan[:2000]
 
