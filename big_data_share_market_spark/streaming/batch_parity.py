@@ -319,13 +319,10 @@ WHERE p.event_type = 'purchase'
 
 
 def q_stream_drawdown_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G6: running per-key peak and drawdown via the Spark 4
-    arbitrary-state v2 API (transformWithStateInPandas + typed
-    ValueState) where its protobuf dependency exists, else the
-    output-identical applyInPandasWithState form (state.py picks).
-    Oracle = the batch running-max window. The RocksDB provider (a
-    v2 requirement, harmless for v1) is set for this query and
-    restored after."""
+    """G6: running per-key peak and drawdown as keyed
+    applyInPandasWithState state. Oracle = the batch running-max
+    window. The state lives in the RocksDB provider, set for this
+    query and restored after."""
     from .state import drawdown_per_key
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, None)

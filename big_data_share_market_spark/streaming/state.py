@@ -10,6 +10,16 @@ partition-parallel and fault-tolerant (state checkpointed by Spark).
 
 Scale notes: state size is O(n_keys × N) — tiny. The shuffle is one
 hash partitioning on the key, the same as any grouped agg.
+
+The other operators here keep one state row per key, except
+`atr_per_key`: its state is one row per hash bucket of keys
+(`_ATR_BUCKETS`, a fixed constant so a restart under another shuffle
+width finds every key's state), holding per-key arrays, so a
+micro-batch makes one Python call per bucket instead of one per key.
+A batch rewrites the arrays of every bucket it touches: its state
+write grows with the keys in those buckets, not with the keys that
+ticked — trivial at the reference's 3 symbols and the fixture's 1 500
+keys.
 """
 
 from __future__ import annotations
@@ -173,7 +183,17 @@ def ema_per_key(sdf: DataFrame,
 
 ATR_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
                   "close DOUBLE, tr DOUBLE, atr_14 DOUBLE")
-ATR_STATE_DDL = "prev DOUBLE, acc DOUBLE, started BOOLEAN"
+#: State: one row per hash bucket, parallel arrays over the bucket's keys.
+ATR_STATE_DDL = ("user_id ARRAY<BIGINT>, prev ARRAY<DOUBLE>, "
+                 "acc ARRAY<DOUBLE>, started ARRAY<BOOLEAN>")
+
+#: Hash buckets the ATR state is grouped into. A literal, never derived
+#: from the session: Spark pins a stateful query's shuffle width in its
+#: checkpoint, but this expression is read when the DataFrame is built,
+#: so a width-derived count would move keys away from their state when
+#: a query restarts in a session of another width. Changing it orphans
+#: the state of existing checkpoints.
+_ATR_BUCKETS = 32
 
 
 def _atr_fn(alpha: float):
@@ -181,42 +201,56 @@ def _atr_fn(alpha: float):
     (NULL on each key's first tick, exactly `abs(value - lag(value))`),
     smoothed by the shared NULL-skipping ewm recurrence — same op
     order as operators/channels.q_atr_wilder's kernel, so the streamed
-    trajectory is bit-identical to the batch closed form."""
+    trajectory is bit-identical to the batch closed form.
+
+    Called once per hash bucket: the bucket's rows are sorted once by
+    (user_id, ts, event_id) and each key's run continues that key's
+    (prev, acc, started) from the bucket's state arrays — per key the
+    same rows in the same order as a call per key would see."""
     import math
 
     import numpy as np
 
     def fn(key: tuple, pdf_iter, state: GroupState):
-        (user_id,) = key
+        carry = {}
         if state.exists:
-            prev, acc, started = state.get
-            prev = math.nan if prev is None else prev
-        else:
-            prev, acc, started = math.nan, math.nan, False
+            for u, p, a, s in zip(*state.get):
+                carry[u] = (math.nan if p is None else p, a, s)
         parts = [pdf for pdf in pdf_iter if len(pdf)]
         if not parts:
-            state.update((prev, acc, started))
             return
         pdf = (pd.concat(parts, ignore_index=True)
-               .sort_values(["ts", "event_id"]).reset_index(drop=True))
+               .sort_values(["user_id", "ts", "event_id"])
+               .reset_index(drop=True))
+        uids = pdf["user_id"]
         vals = pdf["value"].to_numpy(dtype="float64")
+        xs = vals.tolist()  # Python floats: same IEEE ops, faster loop
         out_tr = np.empty(len(vals), dtype="float64")
         out_atr = np.empty(len(vals), dtype="float64")
-        for i, x in enumerate(vals):
-            tr = abs(x - prev)  # nan if either side nan, like lag()
-            prev = x
-            out_tr[i] = tr
-            if math.isnan(tr):
-                out_atr[i] = acc if started else math.nan
-            elif not started:
-                acc, started = tr, True
-                out_atr[i] = acc
-            else:
-                acc = acc + alpha * (tr - acc)
-                out_atr[i] = acc
-        state.update((prev, acc, started))
+        starts = np.flatnonzero(~uids.duplicated().to_numpy())
+        ends = np.append(starts[1:], len(vals))
+        for lo, hi in zip(starts.tolist(), ends.tolist()):
+            u = uids.iat[lo]
+            u = None if pd.isna(u) else int(u)
+            prev, acc, started = carry.get(u, (math.nan, math.nan, False))
+            for i in range(lo, hi):
+                x = xs[i]
+                tr = abs(x - prev)  # nan if either side nan, like lag()
+                prev = x
+                out_tr[i] = tr
+                if math.isnan(tr):
+                    out_atr[i] = acc if started else math.nan
+                elif not started:
+                    acc, started = tr, True
+                    out_atr[i] = acc
+                else:
+                    acc = acc + alpha * (tr - acc)
+                    out_atr[i] = acc
+            carry[u] = (prev, acc, started)
+        prevs, accs, starteds = zip(*carry.values())
+        state.update((list(carry), list(prevs), list(accs), list(starteds)))
         yield pd.DataFrame({
-            "user_id": user_id,
+            "user_id": uids,
             "event_id": pdf["event_id"].astype("int64"),
             "ts": pdf["ts"],
             "close": vals,
@@ -229,11 +263,23 @@ def _atr_fn(alpha: float):
 
 def atr_per_key(sdf: DataFrame, alpha: float = 1.0 / 14.0) -> DataFrame:
     """Streaming Wilder ATR(14) per user_id — live volatility per
-    symbol. State is O(n_keys × 2 doubles); one hash shuffle on the
-    key per micro-batch, like the EMA/Holt kernels."""
+    symbol, one `applyInPandasWithState` call per hash bucket of keys
+    (`pmod(xxhash64(user_id), _ATR_BUCKETS)`) rather than per key: a
+    micro-batch over 1 500 keys makes at most 32 Python calls.
+
+    State is one row per bucket: the user_id, prev, acc and started
+    arrays of every key the bucket has seen. A batch rewrites the
+    arrays of each bucket it touches, so the state written per batch
+    grows with the keys in those buckets, not with the keys that
+    ticked — trivial at the reference's 3 symbols or the fixture's
+    1 500 keys. The bucket count is a fixed constant so that a restart
+    under another shuffle width finds every key's state. One hash
+    shuffle on the bucket per micro-batch."""
+    bucket = F.pmod(F.xxhash64("user_id"), F.lit(_ATR_BUCKETS))
     return (
-        sdf.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
+        sdf.select("user_id", "event_id", "ts", "value",
+                   bucket.alias("bucket"))
+        .groupBy("bucket")
         .applyInPandasWithState(
             _atr_fn(alpha),
             outputStructType=ATR_OUTPUT_DDL,
@@ -548,37 +594,11 @@ def holt_per_key(sdf: DataFrame, a: float = 0.2,
 
 
 # ---------------------------------------------------------------------------
-# Running peak / drawdown via transformWithStateInPandas (the Spark 4
-# arbitrary-state v2 API — typed per-key state handles, RocksDB-backed)
+# Running peak / drawdown
 # ---------------------------------------------------------------------------
 
 DRAWDOWN_OUTPUT_DDL = ("user_id BIGINT, event_id BIGINT, ts TIMESTAMP, "
                        "value DOUBLE, peak DOUBLE, drawdown DOUBLE")
-
-
-def _v2_api_available() -> bool:
-    """transformWithStateInPandas speaks protobuf between the JVM and
-    the Python state server; the harness image ships pyspark without
-    `google.protobuf`, so the v2 path is selected only when it can
-    actually run."""
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def drawdown_per_key(sdf: DataFrame) -> DataFrame:
-    """Per-key running peak and drawdown (peak − value) — the risk
-    metric every trading dashboard keeps per symbol. Two
-    implementations with identical output: the Spark 4
-    arbitrary-state v2 API (`transformWithStateInPandas`, typed
-    ValueState, RocksDB) when its protobuf dependency exists, else
-    the v1 `applyInPandasWithState` form. Same shuffle shape either
-    way (one hash exchange); state is one double per key."""
-    if not _v2_api_available():
-        return _drawdown_per_key_v1(sdf)
-    return _drawdown_per_key_v2(sdf)
 
 
 def _cummax_frame(pdf: pd.DataFrame, prev_peak: float, user_id) -> tuple:
@@ -599,7 +619,10 @@ def _cummax_frame(pdf: pd.DataFrame, prev_peak: float, user_id) -> tuple:
     return out, float(peaks[-1])
 
 
-def _drawdown_per_key_v1(sdf: DataFrame) -> DataFrame:
+def drawdown_per_key(sdf: DataFrame) -> DataFrame:
+    """Per-key running peak and drawdown (peak − value) — the risk
+    metric every trading dashboard keeps per symbol. One hash exchange
+    on the key; state is one double per key."""
     def fn(key: tuple, pdf_iter, state: GroupState):
         (user_id,) = key
         prev = state.get[0] if state.exists else float("-inf")
@@ -621,41 +644,6 @@ def _drawdown_per_key_v1(sdf: DataFrame) -> DataFrame:
             stateStructType="peak DOUBLE",
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def _drawdown_per_key_v2(sdf: DataFrame) -> DataFrame:
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    class Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._peak = handle.getValueState("peak", "peak DOUBLE")
-
-        def handleInputRows(self, key, rows, timerValues):
-            parts = [pdf for pdf in rows if len(pdf)]
-            if not parts:
-                return
-            prev = (self._peak.get()[0] if self._peak.exists()
-                    else float("-inf"))
-            (user_id,) = key
-            out, peak = _cummax_frame(pd.concat(parts, ignore_index=True),
-                                      prev, user_id)
-            self._peak.update((peak,))
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    return (
-        sdf.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=Proc(),
-            outputStructType=DRAWDOWN_OUTPUT_DDL,
-            outputMode="append",
-            timeMode="none",
         )
     )
 

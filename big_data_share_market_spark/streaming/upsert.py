@@ -16,6 +16,7 @@ every 60 s and relies on exactly this).
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import uuid
@@ -28,8 +29,22 @@ KEYS = ["user_id", "ts"]
 ORDER_COL = "event_id"
 
 
+def _recover(target_dir: str) -> None:
+    """Undo a swap a crash cut short. The swap renames the target to
+    `<target>.old` before renaming the new copy in, so an `.old` with
+    no target beside it holds the last committed rows: put it back.
+    Then drop leftover `.old` and `.tmp-*` directories; none of them
+    can be the committed target."""
+    old = f"{target_dir}.old"
+    if os.path.exists(old) and not os.path.exists(target_dir):
+        os.rename(old, target_dir)
+    for stale in glob.glob(glob.escape(target_dir) + ".tmp-*") + [old]:
+        shutil.rmtree(stale, ignore_errors=True)
+
+
 def _merge_write(spark: SparkSession, target_dir: str):
     def write(deduped: DataFrame) -> None:
+        _recover(target_dir)
         cols = deduped.columns
         if os.path.exists(target_dir):
             existing = spark.read.parquet(target_dir)
@@ -41,9 +56,13 @@ def _merge_write(spark: SparkSession, target_dir: str):
             merged = deduped
         tmp = f"{target_dir}.tmp-{uuid.uuid4().hex[:8]}"
         merged.write.mode("overwrite").parquet(tmp)
+        # Never a moment without a committed copy: the old target moves
+        # aside before the new one lands and is deleted only after.
+        old = f"{target_dir}.old"
         if os.path.exists(target_dir):
-            shutil.rmtree(target_dir)
+            os.rename(target_dir, old)
         os.rename(tmp, target_dir)
+        shutil.rmtree(old, ignore_errors=True)
 
     return write
 

@@ -1,7 +1,7 @@
-"""Degenerate-input oracle checks: indicator queries against their
-DuckDB oracles on `events` fixtures derived with
-tools/make_edge_fixture.py — empty, one event per key, and tied `ts`
-within a key — written under the pytest temp root, never into the
+"""Degenerate-input oracle checks: indicator queries and the bucketed
+streaming ATR against their DuckDB oracles on `events` fixtures derived
+with tools/make_edge_fixture.py — empty, one event per key, and tied
+`ts` within a key — written under the pytest temp root, never into the
 source fixture directory."""
 
 from __future__ import annotations
@@ -16,7 +16,11 @@ from tools.make_edge_fixture import CASES, make_edge_fixtures
 from .conftest import SF_DIR, assert_parity
 
 _QUERIES = all_queries()
-_EDGE_QUERIES = ("sma", "ema", "signal_case", "heikin_ashi")
+#: stream_atr_per_key runs its state per hash bucket of keys: one event
+#: per key and tied `ts` are where one key's state could leak into the
+#: next key's run.
+_EDGE_QUERIES = ("sma", "ema", "signal_case", "heikin_ashi",
+                 "stream_atr_per_key")
 
 
 @pytest.fixture(scope="module")

@@ -815,3 +815,26 @@ def test_cusum_single_key_exchange(spark):
     plan = explain_str(fn(spark, SF_DIR), "simple")
     assert plan.count("Exchange hashpartitioning") == 1, plan[:2000]
     assert not has_physical_join(plan), plan[:2000]
+
+
+def test_stream_atr_state_grouped_on_hash_bucket(spark, tmp_path):
+    """The streaming ATR keeps its state per hash bucket of keys, not
+    per key: FlatMapGroupsInPandasWithState groups on
+    pmod(xxhash64(user_id), _ATR_BUCKETS), a literal bucket count, and
+    the stateful operator's hash exchange on that bucket is the only
+    one. Planned over an empty file stream; nothing runs."""
+    from big_data_share_market_spark.streaming.pipeline import EVENTS_DDL
+    from big_data_share_market_spark.streaming.state import (
+        _ATR_BUCKETS, atr_per_key)
+
+    sdf = (spark.readStream.schema(EVENTS_DDL).format("parquet")
+           .load(str(tmp_path)))
+    plan = explain_str(atr_per_key(sdf), "simple")
+    group = re.search(r"FlatMapGroupsInPandasWithState .*?, \[(\w+#\d+L?)\], ",
+                      plan)
+    assert group, plan
+    bucket = re.escape(group.group(1))
+    assert re.search(rf"pmod\(xxhash64\(user_id#\d+L?, 42\), {_ATR_BUCKETS}\)"
+                     rf" AS {bucket}", plan), plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert re.search(rf"Exchange hashpartitioning\({bucket}, ", plan), plan

@@ -24,6 +24,7 @@ driver loss would, WITHOUT committing the in-flight batch.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import uuid
@@ -79,6 +80,28 @@ def _run_to_crash(sdf, foreach, ckpt: str) -> None:
          .trigger(availableNow=True).start())
     with pytest.raises(StreamingQueryException):
         q.awaitTermination()
+
+
+def _append_to(path: str):
+    """foreachBatch sink appending each batch's rows to `path`."""
+    def fn(batch_df, batch_id):
+        batch_df.write.mode("append").parquet(path)
+    return fn
+
+
+def _crash_after_write(inner, at: int):
+    """Wrap a foreachBatch sink: the `at`-th call's output lands, then
+    the batch fails before its checkpoint (offset and state) commits,
+    so a resume replays it."""
+    calls = {"n": 0}
+
+    def fn(batch_df, batch_id):
+        inner(batch_df, batch_id)
+        calls["n"] += 1
+        if calls["n"] == at:
+            raise _InjectedCrash("crash after output write, before "
+                                 "state/offset checkpoint commit")
+    return fn
 
 
 def _run_to_end(sdf, foreach, ckpt: str) -> None:
@@ -228,6 +251,56 @@ def test_upsert_restart_replays_idempotently(spark, scratch):
     assert got == want and len(got) > 0
 
 
+def test_upsert_crash_mid_swap_loses_no_rows(spark, scratch, monkeypatch):
+    """Crash inside the target swap: the old target has been renamed
+    aside but the rewritten copy never landed. A swap that deleted the
+    old target first would leave no target at all, and the replayed
+    batch would write only its own rows, silently dropping every
+    earlier one. The next write must restore the aside copy, sweep
+    the crashed batch's temp output, and end equal to the single-pass
+    dedup."""
+    from big_data_share_market_spark.sources.connectors import (
+        upsert_batch_fn)
+    from big_data_share_market_spark.streaming import upsert
+
+    events = load_table(spark, SF_DIR, "events")
+    src = f"{scratch}/events_src"
+    _stage_multifile(spark, events, src, 3)
+    target = f"{scratch}/target"
+    inner = upsert_batch_fn(upsert.KEYS, upsert._merge_write(spark, target),
+                            order_col=upsert.ORDER_COL)
+
+    real_rename = os.rename
+    swaps = {"n": 0}
+
+    def rename(src_path, dst_path):
+        if ".tmp-" in str(src_path):
+            swaps["n"] += 1
+            if swaps["n"] == 2:  # batch 2: old target already aside
+                raise _InjectedCrash("crash between the two swap renames")
+        real_rename(src_path, dst_path)
+
+    monkeypatch.setattr(upsert.os, "rename", rename)
+    ckpt = f"{scratch}/ckpt"
+    _run_to_crash(_stream(spark, src, _EVENTS_DDL), inner, ckpt)
+    monkeypatch.undo()
+    assert not os.path.exists(target) and os.path.exists(f"{target}.old")
+    assert glob.glob(f"{target}.tmp-*")
+
+    _run_to_end(_stream(spark, src, _EVENTS_DDL), inner, ckpt)
+    assert glob.glob(f"{target}.*") == []
+    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
+    got = [tuple(r) for r in (spark.read.parquet(target).select(*cols)
+                              .orderBy("user_id", "ts", "event_id")).collect()]
+    from pyspark.sql import Window as W
+    w = W.partitionBy(*upsert.KEYS).orderBy(F.desc(upsert.ORDER_COL))
+    want = [tuple(r) for r in
+            (events.withColumn("_rn", F.row_number().over(w))
+             .filter("_rn = 1").select(*cols)
+             .orderBy("user_id", "ts", "event_id")).collect()]
+    assert got == want and len(got) > 0
+
+
 def test_cusum_state_survives_restart(spark, scratch):
     """The STATEFUL-OPERATOR restart proof (the two above cover the
     sink families): kill a live CUSUM drift query mid-replay, resume
@@ -246,33 +319,19 @@ def test_cusum_state_survives_restart(spark, scratch):
     cols = ["user_id", "event_id", "ts", "value",
             "run_mean", "s_pos", "s_neg", "drift"]
 
-    def writer(path):
-        def fn(batch_df, batch_id):
-            batch_df.write.mode("append").parquet(path)
-        return fn
-
     # Uninterrupted reference run.
     ref_out = f"{scratch}/ref_out"
     _run_to_end(cusum_per_key(_stream(spark, src, _EVENTS_DDL)),
-                writer(ref_out), f"{scratch}/ref_ckpt")
+                _append_to(ref_out), f"{scratch}/ref_ckpt")
 
     # Crash-injected run: batch 2's output lands but its checkpoint
     # offset (and state snapshot) never commits -> replayed on resume.
     out = f"{scratch}/out"
-    inner, calls = writer(out), {"n": 0}
-
-    def crash_after_write(batch_df, batch_id):
-        inner(batch_df, batch_id)
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise _InjectedCrash("crash after output write, before "
-                                 "state/offset checkpoint commit")
-
     ckpt = f"{scratch}/ckpt"
     _run_to_crash(cusum_per_key(_stream(spark, src, _EVENTS_DDL)),
-                  crash_after_write, ckpt)
+                  _crash_after_write(_append_to(out), 2), ckpt)
     _run_to_end(cusum_per_key(_stream(spark, src, _EVENTS_DDL)),
-                writer(out), ckpt)
+                _append_to(out), ckpt)
 
     got = [tuple(r) for r in (spark.read.parquet(out)
                               .select(*cols).distinct()
@@ -281,6 +340,48 @@ def test_cusum_state_survives_restart(spark, scratch):
                                .select(*cols)
                                .orderBy("user_id", "event_id")).collect()]
     assert got == want and len(got) > 0
+
+
+def test_bucketed_atr_state_survives_restart(spark, scratch):
+    """The ATR state is one row of per-key arrays per hash bucket.
+    Crash twice after a batch's output lands but before its commit,
+    and resume the second time in a session of another shuffle width:
+    the output must equal an uninterrupted run's. Spark keeps the
+    checkpointed width for the state store, but the bucket expression
+    is built with the DataFrame, so a bucket count taken from the
+    session would send keys to buckets that never held their state
+    (they would restart their true range from NULL)."""
+    from big_data_share_market_spark.session import scoped_conf
+    from big_data_share_market_spark.streaming.state import atr_per_key
+
+    events = load_table(spark, SF_DIR, "events")
+    src = f"{scratch}/events_src"
+    _stage_multifile(spark, events, src, 4)
+    out_cols = ["user_id", "event_id", "ts", "close"] + [
+        F.nanvl(c, F.lit(None).cast("double")).alias(c)
+        for c in ("tr", "atr_14")]
+
+    def rows(path):
+        return [tuple(r) for r in (spark.read.parquet(path)
+                                   .select(*out_cols).distinct()
+                                   .orderBy("user_id", "event_id")).collect()]
+
+    def atr_stream():
+        return atr_per_key(_stream(spark, src, _EVENTS_DDL))
+
+    ref_out = f"{scratch}/ref_out"
+    _run_to_end(atr_stream(), _append_to(ref_out), f"{scratch}/ref_ckpt")
+
+    out, ckpt = f"{scratch}/out", f"{scratch}/ckpt"
+    _run_to_crash(atr_stream(), _crash_after_write(_append_to(out), 2), ckpt)
+    # First resume replays batch 1, runs batch 2 and crashes after it.
+    _run_to_crash(atr_stream(), _crash_after_write(_append_to(out), 2), ckpt)
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", str(width + 3)):
+        _run_to_end(atr_stream(), _append_to(out), ckpt)
+
+    want = rows(ref_out)
+    assert rows(out) == want and len(want) == events.count()
 
 
 def test_python_stream_source_restart_resumes_from_progress(spark, scratch):
